@@ -8,7 +8,7 @@ fidelity, parsed on demand with ``from_json``/``get_json_object``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
@@ -49,7 +49,3 @@ def to_payload(df: DataFrame, include_operation: bool = False) -> DataFrame:
     if include_operation:
         cols.append(F.col("operationType").alias("__op"))
     return df.select(*cols)
-
-
-def is_terminal(op_col: Column) -> Column:
-    return op_col.isin(*TERMINAL_OPERATIONS)

@@ -16,7 +16,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("mrcond-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("mrcond-tests", shuffle_partitions=8)
     yield s
 
 
@@ -24,7 +24,7 @@ def spark():
 #: fixtures are re-created per example; the session is shared intentionally)
 @pytest.fixture(scope="session")
 def spark_global():
-    return get_spark("mrcond-tests", cpus=8, shuffle_partitions=8)
+    return get_spark("mrcond-tests", shuffle_partitions=8)
 
 
 @pytest.fixture(scope="session")

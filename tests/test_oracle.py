@@ -130,7 +130,7 @@ def test_bench_summary_line_fits_driver_tail_window():
             timings[f"q{900 + i}_phantom"] = 9.9
         # worst-case streaming adornments too: all four figures
         # storm-retried to max attempts AND flagged slow, with the
-        # load annotation active at worst-case repr ("sload" + "sdef")
+        # load annotation active at worst-case repr ("sload")
         return build_summary_line(
             timings,
             99999.999,
@@ -153,7 +153,7 @@ def test_bench_summary_line_fits_driver_tail_window():
                 "ses": [99.99],
                 "ssj": [99.99],
             },
-            stream_defer_spent_s=999.9,
+            reps=999,
         )
 
     for n_phantom in (0, 20, 60):

@@ -285,6 +285,16 @@ def test_tumbling_window_counts(spark, event_stream_dir):
     assert rows[(20, "view")] == (1, 6.0)
 
 
+def test_sliding_window_counts(spark, event_stream_dir):
+    df = windows.sliding_counts(replay_events(spark, event_stream_dir), duration="10 minutes", slide="5 minutes")
+    run_to_memory(spark, df, "slide", "complete")
+    rows = {r["win_start"].minute: r["cnt"] for r in spark.sql("SELECT * FROM slide").collect()}
+    # every event lands in two overlapping windows; [23:55,00:05) holds the
+    # three events before 00:05 plus the duplicate, [00:00,00:10) adds the
+    # two at 00:07, and 00:20:10 sits in [00:15,00:25) and [00:20,00:30)
+    assert rows == {55: 4, 0: 6, 5: 2, 15: 1, 20: 1}
+
+
 def test_session_windows(spark, event_stream_dir):
     df = windows.session_counts(replay_events(spark, event_stream_dir), gap="5 minutes")
     run_to_memory(spark, df, "sess", "complete")

@@ -1,12 +1,12 @@
 """Ledger scan: last driver-attested round per query.
 
-The standing rotation-hygiene policy (mrcond_spark/queries/__init__.py
-ROTATION note) cycles the OLDEST driver verdicts back through the ~17
+The standing rotation-hygiene policy (its history is in COVERAGE.md)
+cycles the OLDEST verdicts back through the ~17
 rotation slots each round, oldest round first, ties by query number. This
 tool computes those ages from the CORRECTNESS_r*.json artifacts themselves
 so the window is always built from the actual ledger, not from memory
 (the round-10 judge's round-11 list named r3/r4 rows while eleven r1 rows
-were older — see the ROTATION note).
+were older — see that history).
 
 A row counts as attested in round N if its CORRECTNESS_rN.json entry has
 hash_match (oracle-bearing) or rows_match (rows-only) true. Age 0 = never
